@@ -857,26 +857,28 @@ object Graft {
       .withColumn("chunk_chars", length(col("chunk")).cast("long"))
   }
 
-  /** Fixed-iteration damped PageRank (d = 0.85) over any (src, dst) edge
-    * frame — Pregel-as-joins, two exchanges per round, edge/degree tables
-    * built once by the caller and reused. Ranks are exact integer
-    * micro-units (1.0 ≡ 10^12, floor divisions only) so results are
-    * bit-reproducible under any partitioning. Pass the symmetrized edge
-    * union for undirected graphs; raw directed graphs drop dangling-node
-    * mass (documented simplification). Oracle-checked as
-    * `q_graph_pagerank` on the customer↔supplier trade graph.
+  /** Damped PageRank (d = 0.85) over any (src, dst) edge frame —
+    * Pregel-as-joins, two exchanges per round, edge/degree tables built
+    * once and reused. Ranks are exact integer micro-units (1.0 ≡ 10^12,
+    * floor divisions only) so results are bit-reproducible under any
+    * partitioning. Pass the symmetrized edge union for undirected graphs;
+    * raw directed graphs drop dangling-node mass (documented
+    * simplification). Oracle-checked as `q_graph_pagerank` on the
+    * customer↔supplier trade graph.
     *
-    * `converge = true` is the production mode for graphs whose mixing
-    * time is unknown: iterate until the integer rank vector reaches its
-    * EXACT fixed point (≤ `maxIters`, loud error past it), with a
-    * lineage cut per round so plan depth stays constant. Because the
-    * ranks are integers, the converged result equals any sufficiently
-    * long fixed-round run bit-for-bit — GraphSpec pins that equality —
-    * so the two modes are one algorithm, not two. */
+    * One rank round on the graph loops' shared round driver; `converge`
+    * only picks its halt rule. By default the halt rule is `iters` rounds
+    * (1..20). `converge = true` is the production mode for graphs whose
+    * mixing time is unknown: the halt rule becomes the rank vector's
+    * EXACT integer fixed point (≤ `maxIters`, loud error past it, and a
+    * loud error at the onset of a period-2 oscillation), with the driver
+    * cutting lineage every round so plan depth stays constant. Because
+    * the ranks are integers, the converged result equals any
+    * sufficiently long fixed-round run bit-for-bit — GraphSpec pins that
+    * equality. */
   def pageRank(edges: DataFrame, iters: Int = 3,
       converge: Boolean = false, maxIters: Int = 50): DataFrame =
-    if (converge) ops.Graph.pageRankConverge(edges, maxIters)
-    else ops.Graph.pageRank(edges, iters)
+    ops.Graph.pageRank(edges, iters, converge, maxIters)
 
   /** Community detection by deterministic label propagation: `iters`
     * semi-synchronous rounds over a symmetrized (src, dst) edge list,
@@ -886,30 +888,31 @@ object Graft {
     * counts-then-argmax hash aggs (no per-node window), size-adaptive
     * like [[pageRank]]. Oracle-checked as `q_graph_labelprop`;
     * sequential-replay + dispatch-equality properties in GraphSpec.
-    * `converge = true` iterates to the exact integer fixed point like
-    * [[pageRank]] (deterministic LPA can 2-cycle on bipartite-ish
-    * graphs — that raises rather than returning an arbitrary phase). */
+    * Runs on the same round driver as [[pageRank]]: `converge = true`
+    * only swaps the `iters`-rounds halt rule for the exact integer fixed
+    * point (deterministic LPA can 2-cycle on bipartite-ish graphs — that
+    * raises at `maxIters` rather than returning an arbitrary phase). */
   def labelPropagation(edges: DataFrame, iters: Int = 3,
       converge: Boolean = false, maxIters: Int = 50): DataFrame =
-    if (converge) ops.Graph.labelPropagationConverge(edges, maxIters)
-    else ops.Graph.labelPropagation(edges, iters)
+    ops.Graph.labelPropagation(edges, iters, converge, maxIters)
 
-  /** Personalized PageRank (TrustRank-style): fixed-iteration PageRank
-    * whose restart mass lands ONLY on `seeds` (a frame with a `node`
+  /** Personalized PageRank (TrustRank-style): [[pageRank]]'s rank round
+    * with its restart mass confined to `seeds` (a frame with a `node`
     * column), so rank measures importance relative to the trusted set
     * — the seed-biased curation weighting next to [[pageRank]]'s
     * global centrality. Exact integer micro-units, bit-reproducible
     * at any partitioning; full |V| output vector (non-reached nodes
     * rank 0). Same symmetrize-for-undirected contract as [[pageRank]],
-    * and the same `converge = true` production mode (iterate to the
-    * exact integer fixed point, ≤ `maxIters`, loud past it).
+    * and the same halt rules: `iters` rounds, or with `converge = true`
+    * the exact integer fixed point (≤ `maxIters`, loud past it, loud at
+    * the onset of a period-2 oscillation, which the floor map often
+    * enters here).
     * Oracle-checked as `q_graph_ppr`; sequential-replay, seed-mass,
     * and converge≡fixed-round properties in GraphSpec. */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
       iters: Int = 3, converge: Boolean = false,
       maxIters: Int = 50): DataFrame =
-    if (converge) ops.Graph.pageRankFromConverge(edges, seeds, maxIters)
-    else ops.Graph.pageRankFrom(edges, seeds, iters)
+    ops.Graph.pageRank(edges, iters, converge, maxIters, seeds = Some(seeds))
 
   /** Multi-source bounded-hop BFS: hop distance from every reachable
     * node to its nearest seed, exploring at most `maxHops` rounds —
@@ -973,9 +976,10 @@ object Graft {
     * with their induced degrees. `edges` carries two numeric endpoint
     * columns, canonicalized like [[triangleCounts]] (self-loops
     * dropped, (min, max) dedup). Each peel round is two semi joins +
-    * one degree agg with a lineage cut — the fixed-round variant of
-    * the same loop is oracle-checked as `q_graph_kcore`; GraphSpec
-    * pins fixed-point equality between the two. */
+    * one degree agg on the graph loops' shared round driver, whose halt
+    * rule here is a stable survivor count (≤ `maxRounds`, loud past
+    * it); the same peel under the fixed N-rounds rule is oracle-checked
+    * as `q_graph_kcore`, and GraphSpec pins equality between the two. */
   def kCore(edges: DataFrame, k: Int, src: String = "src",
       dst: String = "dst", maxRounds: Int = 100): DataFrame = {
     import org.apache.spark.sql.functions.{col, least, greatest}
@@ -984,7 +988,7 @@ object Graft {
       .select(least(col(src), col(dst)).as("a"),
         greatest(col(src), col(dst)).as("b"))
       .filter(col("a") =!= col("b")).distinct()
-    ops.Graph.kCoreConverge(canon, k, maxRounds)
+    ops.Graph.kCorePeel(canon, k, maxRounds, converge = true)
   }
 
   /** Per-node triangle participation of an undirected graph: (node,

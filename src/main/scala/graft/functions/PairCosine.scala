@@ -140,12 +140,13 @@ object PairCosine {
   /** One live binding per session: (corpus key, its broadcast). Repeated
     * refine-family keys over the same corpus skip the re-collect +
     * re-broadcast entirely ([[registerOnce]]); a rebind to a DIFFERENT
-    * corpus destroys the superseded broadcast instead of leaking its
-    * executor blocks until GC (r16 advice item 3). Safe because every
-    * plan that captured the old expression is materialized (the refine
-    * loop checkpoints each round) before its builder returns. */
-  private val bound = scala.collection.concurrent.TrieMap
-    .empty[SparkSession, (String, org.apache.spark.broadcast.Broadcast[PairCosineTable])]
+    * corpus unpersists the superseded broadcast's executor blocks
+    * instead of leaking them until GC. It is NOT destroyed: a frame
+    * analyzed before the rebind still holds the old expression, and
+    * executors re-fetch its value from the driver's copy when that
+    * frame runs. */
+  private val bound = new java.util.concurrent.ConcurrentHashMap[
+    SparkSession, (String, org.apache.spark.broadcast.Broadcast[PairCosineTable])]
 
   /** Register `pair_cosine` bound to THIS corpus snapshot. Expressions are
     * captured into plans at analysis time, so queries built before a
@@ -172,20 +173,21 @@ object PairCosine {
 
   /** [[register]], memoized per (session, corpus key): the corpus collect
     * (`build`) and the broadcast happen only when the session is not yet
-    * bound to `corpusKey`. Dead sessions drop out of the memo; a
-    * superseded same-session binding destroys its broadcast. */
+    * bound to `corpusKey`. The check and the rebind are ONE atomic
+    * `compute`, so concurrent callers for a session never both build or
+    * unpersist a binding the other just installed. Dead sessions drop out
+    * of the memo. */
   def registerOnce(spark: SparkSession, corpusKey: String)(
       build: => (Array[Long], Array[Array[Double]], Array[Double])): Unit = {
-    bound.get(spark) match {
-      case Some((k, _)) if k == corpusKey && !spark.sparkContext.isStopped =>
-        ()
-      case prev =>
-        prev.foreach { case (_, old) =>
-          if (!spark.sparkContext.isStopped) old.destroy()
-        }
-        bound.filterInPlace((s, _) => !s.sparkContext.isStopped)
+    bound.compute(spark, (_, prev) =>
+      if (prev != null && prev._1 == corpusKey && !spark.sparkContext.isStopped)
+        prev
+      else {
+        if (prev != null && !spark.sparkContext.isStopped)
+          prev._2.unpersist(blocking = false)
         val (ids, vecs, nrms) = build
-        bound.put(spark, corpusKey -> bind(spark, ids, vecs, nrms))
-    }
+        corpusKey -> bind(spark, ids, vecs, nrms)
+      })
+    bound.keySet.removeIf(_.sparkContext.isStopped)
   }
 }

@@ -31,34 +31,133 @@ import graft.warehouse.Tables
   */
 object Graph {
 
-  /** One PageRank power iteration over a prepared (src, dst) + degree
-    * table: everyone shares `rank div deg` along out-edges, damping 85%
-    * against the 15% uniform restart — all in exact integer micro-units.
-    * `hintSmall` wraps the two |V|-sized sides (rank vector, contribution
-    * vector) in `broadcast()` on the small-graph path, so an iteration is
-    * two broadcast hash joins over the cached edge list and ONE map-side-
-    * combined |V| shuffle — the edge list itself never reshuffles. */
-  private def iterate(fused: DataFrame, deg: DataFrame, ranks: DataFrame,
-      hintSmall: Boolean): DataFrame = {
-    def h(df: DataFrame) = if (hintSmall) broadcast(df) else df
-    // `fused` carries (src, dst, deg): the degree join is iteration-
-    // INVARIANT, so it is paid once at build time, and a round is ONE
-    // rank join + one aggregation. The 15% restart base reaches every
-    // node (incl. in-edge-less ones) as a zero-share seed row UNIONed
-    // under the same aggregation — no join back to a node base.
-    fused
-      .join(h(ranks.withColumnRenamed("node", "src")), "src")
-      .select(col("dst").as("node"), expr("rank div deg").as("share"))
-      .unionAll(deg.select(col("src").as("node"), lit(0L).as("share")))
-      .groupBy("node").agg(sum("share").as("s"))
-      .select(col("node"),
-        (lit(150000000000L) + expr("(85 * s) div 100")).as("rank"))
+  /** How an [[iterate]] loop stops — the Pregel halt rule. */
+  private sealed trait Halt
+
+  /** Exactly `n` rounds. Nothing probes a round's output, so `cut` cuts
+    * it LAZILY: the next round's first read (its broadcast collect or
+    * shuffle) is the only materialization. Without `cut` the rounds stay
+    * one plan — cheaper for a short broadcast chain (the small-graph rank
+    * loop: 13 jobs uncut vs 19 cut on GraphSpec's budget graph). */
+  private final case class Rounds(n: Int, cut: Boolean = true) extends Halt
+
+  /** Until no row's `value` differs from the `__prev` the round carried
+    * through its union (integer states make this an EXACT fixed point);
+    * raises `err` if `max` rounds pass without one. With `cycleErr` the
+    * state keeps its `__prev` between rounds, the round carries it on as
+    * `__prev2`, and a round equal to the one two rounds back raises
+    * `cycleErr` at the onset of a period-2 oscillation. */
+  private final case class FixedPoint(max: Int, value: String, err: String,
+      cycleErr: Option[String] = None) extends Halt
+
+  /** Until a round emits no rows: each round returns only NEW rows, which
+    * the driver unions into the state (BFS's frontier), at most `max`
+    * rounds. */
+  private final case class Frontier(max: Int) extends Halt
+
+  /** Until the state's row count repeats — the exact fixed point of a
+    * monotone peel; raises `err` if `max` rounds pass without one. */
+  private final case class StableCount(max: Int, err: String) extends Halt
+
+  /** The one round driver every iterative algorithm here runs on: state
+    * `init`, a per-round `step(state, round)` and a [[Halt]] rule. The
+    * driver owns the per-round lineage cut (`localCheckpoint`), so round
+    * r + 1 plans against |state| concrete rows instead of an r-deep join
+    * tree, and picks it from what it observes:
+    *  - EAGER when the halt rule probes the round's output (fixed point,
+    *    frontier): the probe is then a narrow filter + limit-1 scan over
+    *    materialized blocks, not a second job over the round's plan;
+    *  - LAZY for a count probe (the count IS the materialization) and
+    *    where only the next round reads the output (fixed rounds);
+    *  - none on a fixed-round chain that stays one bounded plan.
+    * A local checkpoint cannot be recomputed after executor loss; a
+    * production loop that must survive one would use reliable
+    * `checkpoint()` here, in one place. */
+  private def iterate(init: DataFrame, halt: Halt)(
+      step: (DataFrame, Int) => DataFrame): DataFrame = halt match {
+    case Rounds(n, cut) =>
+      (1 to n).foldLeft(init) { (state, r) =>
+        val next = step(state, r)
+        if (cut) next.localCheckpoint(false) else next
+      }
+    case FixedPoint(max, value, err, cycleErr) =>
+      var state = (if (cycleErr.isEmpty) init
+        else init.withColumn("__prev", lit(null).cast(init.schema(value).dataType)))
+        .localCheckpoint(true)
+      var r = 0
+      var done = false
+      while (!done && r < max) {
+        r += 1
+        val next = step(state, r).localCheckpoint(true)
+        done = next.filter(col(value) =!= col("__prev")).isEmpty
+        cycleErr.foreach { e =>
+          if (!done && next.filter(!(col(value) <=> col("__prev2"))).isEmpty)
+            sys.error(e)
+        }
+        state = next.drop(if (cycleErr.isEmpty) "__prev" else "__prev2")
+      }
+      if (!done) sys.error(err)
+      state.drop("__prev")
+    case Frontier(max) =>
+      var state = init.localCheckpoint(true)
+      var r = 0
+      var done = false
+      while (!done && r < max) {
+        r += 1
+        val next = step(state, r).localCheckpoint(true)
+        done = next.isEmpty
+        if (!done) state = state.unionAll(next)
+      }
+      state
+    case StableCount(max, err) =>
+      var state = init.localCheckpoint(false)
+      var size = state.count()
+      var r = 0
+      var done = false
+      while (!done && r < max) {
+        r += 1
+        state = step(state, r).localCheckpoint(false)
+        val n = state.count()
+        done = n == size
+        size = n
+      }
+      if (!done) sys.error(err)
+      state
   }
 
-  /** [[iterate]] with the PREVIOUS rank carried through as `__prev` —
-    * the converge loops' round. The carry rides the aggregation's
-    * union (one extra |V| input with a −1 share/old sentinel), NOT a
-    * join of the previous vector into the output:
+  /** Rank vectors up to this many nodes ride broadcast joins (≈16 B/node
+    * → ~80 MB at the cap, inside a healthy executor's broadcast budget);
+    * bigger graphs fall back to shuffle joins + per-round checkpoints. */
+  private[graft] val BroadcastMaxNodes = 5000000L
+
+  /** The loop-invariant tables of a rank run, built ONCE: out-degrees
+    * (src, deg) — they feed the restart seed every round — and the
+    * degree-annotated edge list (src, dst, deg), so the degree join is
+    * paid at build time and a round joins only the rank vector. The
+    * registry key makes both shareable across keys (q_graph_degrees
+    * reads the same degree table). */
+  private def rankGraph(edges: DataFrame,
+      degCacheKey: Option[String]): (DataFrame, DataFrame) = {
+    val und = edges.select(col("src").cast("long"), col("dst").cast("long"))
+    def cached(name: String, df: => DataFrame) =
+      degCacheKey.fold(df)(k => graft.CacheRegistry.getOrCheckpoint(name, k, df))
+    val deg = cached("graph_out_degrees", und.groupBy("src").agg(count(lit(1)).as("deg")))
+    (deg, cached("graph_edges_deg", und.join(deg, "src")))
+  }
+
+  /** One PageRank power iteration over a [[rankGraph]]: everyone shares
+    * `rank div deg` along out-edges, damping 85% against the 15%
+    * restart — uniform, or confined to a (node, restart) seed frame
+    * (personalized PageRank) — all in exact integer micro-units. The
+    * uniform round has no seed join at all: the restart base reaches
+    * every node (incl. in-edge-less ones) as a zero-share seed row
+    * UNIONed under the same aggregation. `small` wraps the |V|-sized
+    * sides in `broadcast()`, so a round is broadcast hash joins over the
+    * cached edge list and ONE map-side-combined |V| shuffle.
+    *
+    * `carry` (the converge rounds) carries the state's rank — and its
+    * `__prev` — through the aggregation's union as `__prev`/`__prev2`,
+    * NOT as a join of the previous vector into the output:
     * `Dataset.localCheckpoint` INHERITS the source plan's Catalyst
     * statistics, and a prev-JOIN makes each round's size estimate the
     * PRODUCT of two copies of the previous round's — the BigInt
@@ -67,148 +166,127 @@ object Graph {
     * 23 digits → 25M digits by round 22, 10+ s/round in pure
     * BigInteger math). A union ADDS estimates instead, so the carry
     * keeps stats growth linear and 300-round converge runs plan in
-    * constant time. Same restart/floor semantics as [[iterate]],
-    * round output (node, rank, __prev). */
-  private def iterateCarry(fused: DataFrame, deg: DataFrame,
-      ranks: DataFrame, hintSmall: Boolean): DataFrame = {
-    def h(df: DataFrame) = if (hintSmall) broadcast(df) else df
-    fused
-      .join(h(ranks.withColumnRenamed("node", "src")), "src")
-      .select(col("dst").as("node"), expr("rank div deg").as("share"),
-        lit(-1L).as("old"))
-      .unionAll(deg.select(col("src").as("node"), lit(0L).as("share"),
-        lit(-1L).as("old")))
-      .unionAll(ranks.select(col("node"), lit(0L).as("share"),
-        col("rank").as("old")))
-      .groupBy("node").agg(sum("share").as("s"), max("old").as("old"))
-      .select(col("node"),
-        (lit(150000000000L) + expr("(85 * s) div 100")).as("rank"),
-        col("old").as("__prev"))
+    * constant time. */
+  private def rankRound(graph: (DataFrame, DataFrame),
+      restart: Option[DataFrame], ranks: DataFrame, small: Boolean,
+      carry: Boolean): DataFrame = {
+    val (deg, fused) = graph
+    def h(df: DataFrame) = if (small) broadcast(df) else df
+    val noCarry = if (carry) Seq("old", "old2").map(lit(null).cast("long").as(_)) else Nil
+    val shares = fused
+      .join(h(ranks.select(col("node").as("src"), col("rank"))), "src")
+      .select(Seq(col("dst").as("node"), expr("rank div deg").as("share")) ++ noCarry: _*)
+      .unionAll(deg.select(Seq(col("src").as("node"), lit(0L).as("share")) ++ noCarry: _*))
+    val summed =
+      if (!carry) shares.groupBy("node").agg(sum("share").as("s"))
+      else shares
+        .unionAll(ranks.select(col("node"), lit(0L).as("share"),
+          col("rank").as("old"), col("__prev").as("old2")))
+        .groupBy("node").agg(sum("share").as("s"),
+          max("old").as("__prev"), max("old2").as("__prev2"))
+    val base = restart.fold(lit(150000000000L))(_ => coalesce(col("restart"), lit(0L)))
+    restart.fold(summed)(r => summed.join(h(r), Seq("node"), "left"))
+      .select(Seq(col("node"), (base + expr("(85 * s) div 100")).as("rank")) ++
+        (if (carry) Seq(col("__prev"), col("__prev2")) else Nil): _*)
   }
 
-  /** Damped PageRank (d = 0.85) on an arbitrary directed edge list, run
-    * for a FIXED number of power iterations (fixed-round = deterministic
-    * output AND a bounded plan; convergence-tested looping belongs in a
-    * driver loop around this, exactly like [[graft.Graft.kmeansFit]]).
-    * Returns (node, rank) with rank in integer micro-units (1.0 ≡ 10^12
-    * before degree normalization). Edges must already be in the
-    * orientation the caller wants mass to flow; pass the symmetrized
-    * union for an undirected graph. Every node must have ≥1 out-edge
-    * (true by construction for symmetrized graphs — for raw directed
-    * graphs add self-loops or the dangling mass is dropped, the
-    * documented simplification). */
-  /** Rank vectors up to this many nodes ride broadcast joins (≈16 B/node
-    * → ~80 MB at the cap, inside a healthy executor's broadcast budget);
-    * bigger graphs fall back to shuffle joins + per-round checkpoints. */
-  private[graft] val BroadcastMaxNodes = 5000000L
-
+  /** Damped PageRank (d = 0.85) on an arbitrary directed edge list —
+    * uniform, or personalized when `seeds` (a `node` frame) is given:
+    * TrustRank-style, the restart mass lands ONLY on the seed set
+    * (r0 = 10^12 on each seed and 0 elsewhere, 0.15·10^12 restart per
+    * round to seeds only), so rank measures proximity-weighted influence
+    * relative to the seeds where uniform rank measures global
+    * centrality. Returns the full |V| vector (node, rank) in integer
+    * micro-units (1.0 ≡ 10^12 before degree normalization). Edges must
+    * already be in the orientation the caller wants mass to flow; pass
+    * the symmetrized union for an undirected graph. Every node must have
+    * ≥1 out-edge (true by construction for symmetrized graphs — for raw
+    * directed graphs add self-loops or the dangling mass is dropped, the
+    * documented simplification).
+    *
+    * One [[rankRound]] on the [[iterate]] driver; `converge` only picks
+    * the halt rule:
+    *  - fixed (`iters` rounds, 1..20 — deterministic output AND a bounded
+    *    plan; the oracle mode). Size-adaptive, the same dispatch pattern
+    *    as the dedup cluster resolution: |V| from one tiny agg over the
+    *    degree table picks between two shapes with IDENTICAL integer
+    *    semantics (GraphSpec pins their equality). Small |V|: the rank
+    *    vector rides broadcast joins, the edge list never reshuffles and
+    *    the chain needs no cut (a retry recomputes at most this bounded
+    *    chain over the cached graph). Large |V| (the 100 TB graph):
+    *    broadcast would OOM, so ranks flow through shuffle joins and each
+    *    round is lineage-cut.
+    *  - converge (≤ `maxIters`, 1..500): iterate to the EXACT integer
+    *    fixed point — once a round changes no node every later round is
+    *    the identity, so the result equals any sufficiently long
+    *    fixed-round run (GraphSpec pins that via step identity). The
+    *    floor map is not monotone, so on some graphs (often with seeds,
+    *    ~1 in 3 small random graphs) the vector enters a PERIOD-2
+    *    oscillation one ulp wide instead; that raises at onset, and
+    *    exhausting `maxIters` raises — silent non-convergence is not a
+    *    result. */
   private[graft] def pageRank(edges: DataFrame, iters: Int,
-      degCacheKey: Option[String] = None,
+      converge: Boolean = false, maxIters: Int = 50,
+      seeds: Option[DataFrame] = None, degCacheKey: Option[String] = None,
       broadcastMaxNodes: Long = BroadcastMaxNodes): DataFrame = {
-    require(iters >= 1 && iters <= 20,
-      s"pageRank runs a fixed unrolled plan per iteration; $iters is " +
+    val name = if (seeds.isEmpty) "pageRank" else "personalized PageRank"
+    if (converge) require(maxIters >= 1 && maxIters <= 500,
+      s"maxIters outside the sane 1..500 range: $maxIters")
+    else require(iters >= 1 && iters <= 20,
+      s"$name runs a fixed unrolled plan per iteration; $iters is " +
         "outside the sane 1..20 range (each iteration adds two exchanges)")
-    val und = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    // out-degrees feed the restart seed every round; without a persist
-    // each read re-runs the |E| groupBy. The registry key makes the
-    // persist shareable with q_graph_degrees.
-    def buildDeg = und.groupBy("src").agg(count(lit(1)).as("deg"))
-    val deg = degCacheKey
-      .map(k => graft.CacheRegistry.getOrCheckpoint("graph_out_degrees", k, buildDeg))
-      .getOrElse(buildDeg)
-    // the degree-annotated edge list (src, dst, deg): built and cached
-    // ONCE — the per-round plan joins only the rank vector against it
-    def buildFused = und.join(deg, "src")
-    val fused = degCacheKey
-      .map(k => graft.CacheRegistry.getOrCheckpoint("graph_edges_deg", k, buildFused))
-      .getOrElse(buildFused)
-    // Size-adaptive execution, the same dispatch pattern as the dedup
-    // cluster resolution (driver union-find below a threshold, BSP
-    // above). |V| comes from one tiny agg over the (usually cached)
-    // degree table and picks between two shapes with IDENTICAL integer
-    // semantics (GraphSpec pins their equality):
-    //  - small |V|: the rank/contribution vectors ride BROADCAST hash
-    //    joins, so an iteration never reshuffles the edge list and the
-    //    whole fixed-round loop executes as ONE job of chained broadcast
-    //    stages. No checkpoint needed — a retry recomputes at most this
-    //    bounded chain over the cached graph, and plan depth is capped
-    //    by the iters<=20 guard.
-    //  - large |V| (the 100 TB graph): broadcast would OOM, so ranks
-    //    flow through shuffle joins against the cached graph, and each
-    //    round is materialized + lineage-CUT (localCheckpoint) so round
-    //    i+1 starts from |V| concrete rows instead of an i-deep join
-    //    tree — the standard Pregel-as-joins hygiene; a production loop
-    //    that must survive executor loss would use reliable checkpoint().
-    val nV = deg.count()
-    val small = nV <= broadcastMaxNodes
-    var ranks = deg.select(col("src").as("node"), lit(1000000000000L).as("rank"))
-    for (i <- 1 to iters) {
-      ranks = iterate(fused, deg, ranks, hintSmall = small)
-      if (!small && i < iters) ranks = ranks.localCheckpoint(true)
-    }
-    ranks
+    val (deg, fused) = rankGraph(edges, degCacheKey)
+    // a converge run reads both tables in every round's own job
+    if (converge) { deg.persist(); fused.persist() }
+    try {
+      val small = deg.count() <= broadcastMaxNodes
+      val restart = seeds.map(pprSeeds)
+      val init = restart.fold(deg.select(col("src").as("node"),
+        lit(1000000000000L).as("rank")))(pprInit(deg, _, small))
+      val halt =
+        if (converge) FixedPoint(maxIters, "rank",
+          s"$name did not reach its integer fixed point in $maxIters rounds",
+          Some(s"$name oscillates with period 2 at the integer grain (the " +
+            "floor map is not monotone on this graph); use the fixed-round " +
+            "mode (iters = N), whose bounded output is the oracle-checked " +
+            "contract"))
+        else Rounds(iters, cut = !small)
+      iterate(init, halt)((ranks, _) =>
+        rankRound((deg, fused), restart, ranks, small, carry = converge))
+    } finally if (converge) { deg.unpersist(); fused.unpersist() }
   }
 
-  /** Run-to-convergence PageRank — the 100 TB production mode next to
-    * the fixed-round oracle mode: iterate [[iterate]] until the integer
-    * rank vector reaches its EXACT fixed point (micro-unit ranks make
-    * the convergence test exact equality, not an epsilon — once a round
-    * changes no node, every later round is the identity, so the result
-    * equals any sufficiently long fixed-round run; GraphSpec pins
-    * that). Every round is materialized + lineage-cut, so plan depth
-    * never grows with the round count and `maxIters` may far exceed
-    * the fixed-round 20-cap; the per-round fixed-point probe rides
-    * inside that materialization (the previous rank joins on before
-    * the checkpoint), so the changed-row test is a narrow filter +
-    * limit-1 scan over materialized blocks, not a second |V| join
-    * job. Raises if `maxIters` rounds pass without a fixed
-    * point — silent non-convergence is not a result. */
   /** One PageRank step applied to a GIVEN rank vector over freshly
     * built graph tables — the test hook that lets GraphSpec verify the
     * converged vector is an exact fixed point (step(conv) == conv).
     * Because the integer map is deterministic and a fixed point is
     * absorbing, that identity is equivalent to equality with every
     * fixed-round run long enough to have converged. */
-  private[graft] def pageRankStep(edges: DataFrame,
-      ranks: DataFrame): DataFrame = {
-    val und = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    val deg = und.groupBy("src").agg(count(lit(1)).as("deg"))
-    iterate(und.join(deg, "src"), deg, ranks, hintSmall = true)
-  }
+  private[graft] def pageRankStep(edges: DataFrame, ranks: DataFrame): DataFrame =
+    rankRound(rankGraph(edges, None), None, ranks, small = true, carry = false)
 
-  private[graft] def pageRankConverge(edges: DataFrame, maxIters: Int = 50,
-      broadcastMaxNodes: Long = BroadcastMaxNodes): DataFrame = {
-    require(maxIters >= 1 && maxIters <= 500,
-      s"maxIters outside the sane 1..500 range: $maxIters")
-    val und = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    val deg = und.groupBy("src").agg(count(lit(1)).as("deg")).persist()
-    val fused = und.join(deg, "src").persist()
-    val nV = deg.count()
-    val small = nV <= broadcastMaxNodes
-    var ranks = deg.select(col("src").as("node"),
-      lit(1000000000000L).as("rank")).localCheckpoint(true)
-    var i = 0
-    var done = false
-    while (!done && i < maxIters) {
-      // the fixed-point probe rides INSIDE the round's materialization:
-      // the previous rank is CARRIED through the round's aggregation
-      // union ([[iterateCarry]] — NOT joined in afterwards, which
-      // would square the checkpoint-inherited Catalyst size estimate
-      // every round and stall planning in BigInt stats math by round
-      // ~20), so the changed-row test is a narrow filter + limit-1
-      // scan over already-materialized blocks instead of its own
-      // |V| join job — converge mode costs one full job per round, not
-      // two (round-13 verdict item 7)
-      val next = iterateCarry(fused, deg, ranks, hintSmall = small)
-        .localCheckpoint(true)
-      done = next.filter(col("rank") =!= col("__prev")).isEmpty
-      ranks = next.select("node", "rank")
-      i += 1
-    }
-    deg.unpersist(); fused.unpersist()
-    if (!done) sys.error(
-      s"pageRank did not reach its integer fixed point in $maxIters rounds")
-    ranks
+  /** [[pageRankStep]] for personalized PageRank (~170 rounds to mix to
+    * the integer grain puts full convergence past the fixed-round
+    * 20-cap, so equality with "every long-enough fixed-round run" is
+    * established via step identity, not a literal long run). */
+  private[graft] def pprStep(edges: DataFrame, seeds: DataFrame,
+      ranks: DataFrame): DataFrame =
+    rankRound(rankGraph(edges, None), Some(pprSeeds(seeds)), ranks, small = true, carry = false)
+
+  /** seed restart table: |S|-sized, checkpointed once, joined per round */
+  private def pprSeeds(seeds: DataFrame): DataFrame =
+    seeds.select(col("node").cast("long").as("node"))
+      .distinct().withColumn("restart", lit(150000000000L))
+      .localCheckpoint(true)
+
+  private def pprInit(deg: DataFrame, seedSet: DataFrame,
+      small: Boolean): DataFrame = {
+    def h(df: DataFrame) = if (small) broadcast(df) else df
+    deg.select(col("src").as("node"))
+      .join(h(seedSet), Seq("node"), "left")
+      .select(col("node"),
+        when(col("restart").isNotNull, lit(1000000000000L)).otherwise(lit(0L))
+          .as("rank"))
   }
 
   /** The customer↔supplier trade graph: an edge for every DISTINCT
@@ -262,7 +340,7 @@ object Graph {
       val edges = tradeGraph(s, d)
       val seeds = edges.select(col("src").as("node")).distinct()
         .filter(expr("node % 2 = 1 AND ((node - 1) div 2) % 7 = 1"))
-      pageRankFrom(edges, seeds, iters = 3, degCacheKey = Some(d))
+      pageRank(edges, iters = 3, seeds = Some(seeds), degCacheKey = Some(d))
     })
 
   /** The DuckDB twin of [[pageRank]] on the trade graph, iterations
@@ -296,7 +374,7 @@ object Graph {
     base + steps
   }
 
-  /** The DuckDB twin of [[pageRankFrom]] on the trade graph with the
+  /** The DuckDB twin of personalized [[pageRank]] on the trade graph with the
     * q_graph_bfs seed set — [[duckPageRank]]'s CTE chain with the
     * restart mass confined to the seeds. */
   private def duckPprChain(iters: Int): String = {
@@ -346,30 +424,44 @@ object Graph {
          |FROM r$iters ORDER BY node_id""".stripMargin
 
   /** Semi-synchronous label propagation (community detection) over a
-    * symmetrized edge list: `iters` fixed rounds, each node adopting
-    * the most frequent label among its neighbours with a DETERMINISTIC
-    * tie-break (frequency ties → smallest label — GraphX's LPA returns
-    * an arbitrary tied label, which could never hash-match a replay).
-    * The per-round plan is (node, label) hash agg → ONE mergeable
-    * struct-max `max((n, −label))` per node — labels are numeric so
-    * the min-label tie-break is the negation trick, no join-back and
-    * never a per-node window. Same size-adaptive dispatch as
-    * [[pageRank]]: the label vector rides broadcast joins on small
-    * graphs and shuffle joins above [[BroadcastMaxNodes]]; EVERY round
-    * ends in a `localCheckpoint` lineage cut — each round broadcasts
-    * the label vector, and broadcasting an un-materialized chain
-    * re-executes all earlier rounds, O(iters²) work (measured 12 s →
-    * 1.x s at sf0.1 over 3 rounds). */
+    * symmetrized edge list, each node adopting the most frequent label
+    * among its neighbours with a DETERMINISTIC tie-break (frequency ties
+    * → smallest label — GraphX's LPA returns an arbitrary tied label,
+    * which could never hash-match a replay). The per-round plan is
+    * (node, label) hash agg → ONE mergeable struct-max `max((n, −label))`
+    * per node — labels are numeric so the min-label tie-break is the
+    * negation trick, no join-back and never a per-node window. Same
+    * size-adaptive dispatch as [[pageRank]]: the label vector rides
+    * broadcast joins on small graphs and shuffle joins above
+    * [[BroadcastMaxNodes]].
+    *
+    * One round on the [[iterate]] driver; `converge` only picks the halt
+    * rule: `iters` fixed rounds (1..20), each lazily cut — each round
+    * broadcasts the label vector, and broadcasting an un-materialized
+    * chain re-executes all earlier rounds, O(iters²) work (measured
+    * 12 s → 1.x s at sf0.1 over 3 rounds); or, with `converge`, rounds
+    * until the integer label vector stops changing (≤ `maxIters`,
+    * 1..500), which equals any longer fixed-round run. Deterministic
+    * min-tie-break LPA CAN 2-cycle on bipartite-ish structures, so
+    * non-convergence raises — a loud error beats an arbitrary winner. */
   private[graft] def labelPropagation(edges: DataFrame, iters: Int,
+      converge: Boolean = false, maxIters: Int = 50,
       broadcastMaxNodes: Long = BroadcastMaxNodes): DataFrame = {
-    require(iters >= 1 && iters <= 20,
+    if (converge) require(maxIters >= 1 && maxIters <= 500,
+      s"maxIters outside the sane 1..500 range: $maxIters")
+    else require(iters >= 1 && iters <= 20,
       s"labelPropagation unrolls a fixed plan per round; $iters is " +
         "outside the sane 1..20 range")
     val und = edges.select(col("src").cast("long"), col("dst").cast("long"))
     val nodes = und.select(col("src").as("node")).distinct()
     val small = nodes.count() <= broadcastMaxNodes
-    var labels = nodes.withColumn("label", col("node"))
-    for (_ <- 1 to iters) {
+    val halt =
+      if (converge) FixedPoint(maxIters, "label",
+        s"labelPropagation did not converge in $maxIters rounds " +
+          "(deterministic LPA can oscillate; inspect the graph or use " +
+          "the fixed-round mode)")
+      else Rounds(iters)
+    iterate(nodes.withColumn("label", col("node")), halt) { (labels, _) =>
       val lab = (if (small) broadcast(labels) else labels)
         .select(col("node").as("__n"), col("label"))
       // ONE exchange per round (r17 round, guide §2.4): hash(src) set
@@ -388,69 +480,17 @@ object Graph {
         .groupBy("node")
         .agg(max(struct(col("n"), (-col("label")).as("nl"))).as("m"))
         .select(col("node"), (-col("m.nl")).as("label"))
-      // LAZY checkpoint: the next round's broadcast collect is the
-      // first (and only) materialization, so it persists the partitions
-      // as a side effect — one pass instead of an eager job + a collect
-      labels = next.localCheckpoint(false)
-    }
-    labels
-  }
-
-  /** Run-to-convergence label propagation — [[pageRankConverge]]'s LPA
-    * twin: semi-synchronous deterministic rounds until the label vector
-    * stops changing (labels are integers, so the fixed-point test is
-    * exact equality and the converged result equals any longer
-    * fixed-round run). Per-round lineage cuts keep plan depth constant;
-    * raises on non-convergence within `maxIters` (deterministic
-    * min-tie-break LPA CAN 2-cycle on bipartite-ish structures — a
-    * loud error beats an arbitrary winner). */
-  private[graft] def labelPropagationConverge(edges: DataFrame,
-      maxIters: Int = 50,
-      broadcastMaxNodes: Long = BroadcastMaxNodes): DataFrame = {
-    require(maxIters >= 1 && maxIters <= 500,
-      s"maxIters outside the sane 1..500 range: $maxIters")
-    val und = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    val nodes = und.select(col("src").as("node")).distinct()
-    val small = nodes.count() <= broadcastMaxNodes
-    var labels = nodes.withColumn("label", col("node")).localCheckpoint(true)
-    var i = 0
-    var done = false
-    while (!done && i < maxIters) {
-      val lab = (if (small) broadcast(labels) else labels)
-        .select(col("node").as("__n"), col("label"))
-      val counts = und.join(lab, und("dst") === col("__n"))
-        // hash(src) satisfies both this agg and the argmax (see
-        // [[labelPropagation]]) — one exchange, not two
-        .repartition(und("src"))
-        .groupBy(und("src").as("node"), col("label"))
-        .agg(count(lit(1)).as("n"))
-      // probe folded into the materialization, like [[pageRankConverge]]:
-      // the previous label is CARRIED through one extra |V| union +
-      // max-agg (NULL rows are invisible to max, so the carry is
-      // sign-agnostic) rather than JOINED on — a prev-join would square
-      // the checkpoint-inherited size estimate every round and stall
-      // planning in BigInt stats math (see [[iterateCarry]]); the
-      // changed-row test stays a narrow filter over materialized
-      // blocks — one full job per round, not two
-      val next = counts
-        .groupBy("node")
-        .agg(max(struct(col("n"), (-col("label")).as("nl"))).as("m"))
-        .select(col("node"), (-col("m.nl")).as("label"),
-          lit(null).cast("long").as("old"))
+      // a converge round carries the previous label through one extra
+      // |V| union + max-agg (NULL rows are invisible to max, so the
+      // carry is sign-agnostic) rather than JOINING it on — see
+      // [[rankRound]] for why a prev-join stalls planning
+      if (!converge) next
+      else next.withColumn("old", lit(null).cast("long"))
         .unionAll(labels.select(col("node"),
           lit(null).cast("long").as("label"), col("label").as("old")))
         .groupBy("node")
         .agg(max("label").as("label"), max("old").as("__prev"))
-        .localCheckpoint(true)
-      done = next.filter(col("label") =!= col("__prev")).isEmpty
-      labels = next.select("node", "label")
-      i += 1
     }
-    if (!done) sys.error(
-      s"labelPropagation did not converge in $maxIters rounds " +
-        "(deterministic LPA can oscillate; inspect the graph or use " +
-        "the fixed-round mode)")
-    labels
   }
 
   /** DuckDB twin of [[labelPropagation]] on the trade graph, rounds
@@ -640,199 +680,21 @@ object Graph {
     e1.join(nodes, e1("b") === nodes("n"), "left_semi")
   }
 
-  /** FIXED-ROUND k-core peel over a canonical (a < b) edge list:
-    * `rounds` peels of degree-<k nodes, then the final degree table of
-    * the surviving induced subgraph (n, dg ≥ k). Each round cuts
-    * lineage (the survivor set is referenced twice per round — an
-    * unrolled chain doubles per round). The oracle key
-    * `q_graph_kcore` replays these exact rounds as chained CTEs. */
-  /** Personalized PageRank ([[graft.Graft.personalizedPageRank]];
-    * TrustRank-style seed-biased importance): the restart mass lands
-    * ONLY on the seed set, so rank measures proximity-weighted
-    * influence relative to the seeds — the "expand from trusted
-    * documents, importance-weighted" curation primitive, where uniform
-    * [[pageRank]] measures global centrality. Same exact integer
-    * contract (micro-units, floor divisions, bit-reproducible at any
-    * partitioning), same fixed-round bounded plan, same size-adaptive
-    * broadcast/shuffle dispatch and per-round lineage cuts as
-    * [[pageRank]]; r0 = 10^12 on each seed and 0 elsewhere, each round
-    * adds 0.15·10^12 restart to seeds only. Non-seed sinks keep rank 0
-    * until mass reaches them, so the output is a full |V| vector (no
-    * sparse drop-out — deterministic row count). */
-  private[graft] def pageRankFrom(edges: DataFrame, seeds: DataFrame,
-      iters: Int, degCacheKey: Option[String] = None,
-      broadcastMaxNodes: Long = BroadcastMaxNodes): DataFrame = {
-    require(iters >= 1 && iters <= 20,
-      s"pageRankFrom runs a fixed unrolled plan per iteration; $iters is " +
-        "outside the sane 1..20 range (each iteration adds two exchanges)")
-    val und = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    def buildDeg = und.groupBy("src").agg(count(lit(1)).as("deg"))
-    val deg = degCacheKey
-      .map(k => graft.CacheRegistry.getOrCheckpoint("graph_out_degrees", k, buildDeg))
-      .getOrElse(buildDeg)
-    def buildFused = und.join(deg, "src")
-    val fused = degCacheKey
-      .map(k => graft.CacheRegistry.getOrCheckpoint("graph_edges_deg", k, buildFused))
-      .getOrElse(buildFused)
-    val nV = deg.count()
-    val small = nV <= broadcastMaxNodes
-    val seedSet = pprSeeds(seeds, small)
-    var ranks = pprInit(deg, seedSet, small)
-    for (i <- 1 to iters) {
-      ranks = pprIterate(fused, deg, seedSet, ranks, hintSmall = small)
-      if (!small && i < iters) ranks = ranks.localCheckpoint(true)
-    }
-    ranks
-  }
-
-  /** seed restart table: |S|-sized, checkpointed once, joined per round */
-  private def pprSeeds(seeds: DataFrame, small: Boolean): DataFrame =
-    seeds.select(col("node").cast("long").as("node"))
-      .distinct().withColumn("restart", lit(150000000000L))
-      .localCheckpoint(true)
-
-  private def pprInit(deg: DataFrame, seedSet: DataFrame,
-      small: Boolean): DataFrame = {
-    def h(df: DataFrame) = if (small) broadcast(df) else df
-    deg.select(col("src").as("node"))
-      .join(h(seedSet), Seq("node"), "left")
-      .select(col("node"),
-        when(col("restart").isNotNull, lit(1000000000000L)).otherwise(lit(0L))
-          .as("rank"))
-  }
-
-  /** One personalized-PageRank power iteration — [[iterate]] with the
-    * restart mass confined to `seedSet` (a (node, restart) frame). */
-  private def pprIterate(fused: DataFrame, deg: DataFrame,
-      seedSet: DataFrame, ranks: DataFrame, hintSmall: Boolean): DataFrame = {
-    def h(df: DataFrame) = if (hintSmall) broadcast(df) else df
-    fused
-      .join(h(ranks.withColumnRenamed("node", "src")), "src")
-      .select(col("dst").as("node"), expr("rank div deg").as("share"))
-      .unionAll(deg.select(col("src").as("node"), lit(0L).as("share")))
-      .groupBy("node").agg(sum("share").as("s"))
-      .join(h(seedSet), Seq("node"), "left")
-      .select(col("node"),
-        (coalesce(col("restart"), lit(0L)) + expr("(85 * s) div 100"))
-          .as("rank"))
-  }
-
-  /** [[pprIterate]] with the previous rank carried as `__prev` through
-    * the aggregation union — the converge round (see [[iterateCarry]]
-    * for why the carry must be a union, not a join: checkpoint-
-    * inherited stats square under a self-join and stall planning). */
-  private def pprIterateCarry(fused: DataFrame, deg: DataFrame,
-      seedSet: DataFrame, ranks: DataFrame, hintSmall: Boolean): DataFrame = {
-    def h(df: DataFrame) = if (hintSmall) broadcast(df) else df
-    fused
-      .join(h(ranks.withColumnRenamed("node", "src")), "src")
-      .select(col("dst").as("node"), expr("rank div deg").as("share"),
-        lit(-1L).as("old"))
-      .unionAll(deg.select(col("src").as("node"), lit(0L).as("share"),
-        lit(-1L).as("old")))
-      .unionAll(ranks.select(col("node"), lit(0L).as("share"),
-        col("rank").as("old")))
-      .groupBy("node").agg(sum("share").as("s"), max("old").as("old"))
-      .join(h(seedSet), Seq("node"), "left")
-      .select(col("node"),
-        (coalesce(col("restart"), lit(0L)) + expr("(85 * s) div 100"))
-          .as("rank"),
-        col("old").as("__prev"))
-  }
-
-  /** One PPR step over a GIVEN rank vector — the GraphSpec test hook
-    * that proves the converged vector is an exact fixed point (the
-    * [[pageRankStep]] pattern; ~170 rounds to mix to the integer grain
-    * puts full convergence past the fixed-round 20-cap, so equality
-    * with "every long-enough fixed-round run" is established via
-    * step-identity, not a literal long run). */
-  private[graft] def pprStep(edges: DataFrame, seeds: DataFrame,
-      ranks: DataFrame): DataFrame = {
-    val und = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    val deg = und.groupBy("src").agg(count(lit(1)).as("deg"))
-    pprIterate(und.join(deg, "src"), deg, pprSeeds(seeds, small = true),
-      ranks, hintSmall = true)
-  }
-
-  /** Run-to-convergence personalized PageRank — [[pageRankFromConverge]]
-    * is to [[pageRankFrom]] exactly what [[pageRankConverge]] is to
-    * [[pageRank]]: iterate [[pprIterate]] to the EXACT integer fixed
-    * point with the probe folded into each round's materialization,
-    * loud error past `maxIters`.
-    *
-    * CYCLE CAVEAT the uniform variant rarely trips but PPR often does:
-    * the floor map is not monotone, so on some graphs the integer
-    * vector enters a PERIOD-2 oscillation one ulp wide instead of a
-    * fixed point (empirically ~1 in 3 small random graphs). Each round
-    * therefore also compares against the round-BEFORE-last (a narrow
-    * |V| probe over materialized blocks) and raises the documented
-    * 2-cycle error IMMEDIATELY — the LPA oscillation policy, but
-    * detected at onset rather than discovered at the maxIters wall.
-    * The fixed-round mode (iters = N) is the oracle-checked contract
-    * and is always well-defined. */
-  private[graft] def pageRankFromConverge(edges: DataFrame, seeds: DataFrame,
-      maxIters: Int = 50,
-      broadcastMaxNodes: Long = BroadcastMaxNodes): DataFrame = {
-    require(maxIters >= 1 && maxIters <= 500,
-      s"maxIters outside the sane 1..500 range: $maxIters")
-    val und = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    val deg = und.groupBy("src").agg(count(lit(1)).as("deg")).persist()
-    val fused = und.join(deg, "src").persist()
-    val nV = deg.count()
-    val small = nV <= broadcastMaxNodes
-    val seedSet = pprSeeds(seeds, small)
-    var ranks = pprInit(deg, seedSet, small).localCheckpoint(true)
-    var prevPrev: DataFrame = null
-    var i = 0
-    var done = false
-    while (!done && i < maxIters) {
-      val next = pprIterateCarry(fused, deg, seedSet, ranks,
-        hintSmall = small).localCheckpoint(true)
-      done = next.filter(col("rank") =!= col("__prev")).isEmpty
-      if (!done && prevPrev != null) {
-        // period-2 probe: both sides are one-node LogicalRDD scans, so
-        // the join is a narrow extra job over materialized blocks (and
-        // its plan is executed and DISCARDED — never carried, so the
-        // stats-squaring hazard iterateCarry documents cannot build up)
-        val pp = (if (small) broadcast(prevPrev) else prevPrev)
-          .select(col("node").as("__qn"), col("rank").as("__pp"))
-        val cycled = next.join(pp, col("node") === col("__qn"))
-          .filter(col("rank") =!= col("__pp")).isEmpty
-        if (cycled) {
-          deg.unpersist(); fused.unpersist()
-          sys.error("personalized PageRank oscillates with period 2 at " +
-            "the integer grain (the floor map is not monotone on this " +
-            "graph); use the fixed-round mode (iters = N), whose bounded " +
-            "output is the oracle-checked contract")
-        }
-      }
-      prevPrev = ranks
-      ranks = next.select("node", "rank")
-      i += 1
-    }
-    deg.unpersist(); fused.unpersist()
-    if (!done) sys.error(
-      s"personalized PageRank did not reach its integer fixed point in " +
-        s"$maxIters rounds")
-    ranks
-  }
-
   /** Multi-source bounded-hop BFS ([[graft.Graft.bfs]]): hop distance
     * from every reachable node to its NEAREST seed, exploring at most
     * `maxHops` rounds. Returns (node, dist) — one row per node reached
     * within the horizon, dist ∈ [0, maxHops], seeds at 0.
     *
-    * Engine form is frontier BFS as joins: round r joins the
-    * (checkpointed, |frontier|-sized) frontier to the edge list,
-    * distinct-s the neighbors, and anti-joins the visited set — so a
-    * round costs one frontier-bounded shuffle, never a full-lineage
-    * |E| rescan (each frontier is a one-node LogicalRDD, the same
-    * replanning cut the converge loops use; pass a registry-cached
-    * edge frame so the scan side is one node too). An exhausted
-    * frontier short-circuits the remaining rounds (the materialized
-    * frontier makes the emptiness probe free), so `maxHops` is a
-    * horizon, not a forced cost. Edges must already be in the
-    * orientation the caller wants distance to flow (symmetrized for
+    * Engine form is frontier BFS as joins on the [[iterate]] driver's
+    * [[Frontier]] rule: round r joins the frontier (the visited rows at
+    * dist r − 1, one-node LogicalRDD scans) to the edge list, distinct-s
+    * the neighbors, and anti-joins the visited set — so a round costs
+    * one frontier-bounded shuffle, never a full-lineage |E| rescan (pass
+    * a registry-cached edge frame so the scan side is one node too). An
+    * exhausted frontier short-circuits the remaining rounds (the
+    * materialized frontier makes the emptiness probe free), so
+    * `maxHops` is a horizon, not a forced cost. Edges must already be in
+    * the orientation the caller wants distance to flow (symmetrized for
     * undirected graphs, same contract as [[pageRank]]). All-integer,
     * partitioning-independent output. */
   private[graft] def bfs(edges: DataFrame, seeds: DataFrame,
@@ -842,26 +704,15 @@ object Graph {
         "the sane 1..16 range (unbounded reachability is connectedComponents)")
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
-    var visited = seeds.select(col("node").cast("long").as("node"))
-      .distinct().withColumn("dist", lit(0L)).localCheckpoint(true)
-    var frontier = visited.select("node")
-    var r = 1
-    var exhausted = false
-    while (r <= maxHops && !exhausted) {
-      val next = e
-        .join(frontier.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node")).distinct()
-        .join(visited, Seq("node"), "left_anti")
-        .withColumn("dist", lit(r.toLong))
-        .localCheckpoint(true)
-      if (next.isEmpty) exhausted = true
-      else {
-        visited = visited.unionAll(next)
-        frontier = next.select("node")
-      }
-      r += 1
+    iterate(seeds.select(col("node").cast("long").as("node"))
+        .distinct().withColumn("dist", lit(0L)), Frontier(maxHops)) {
+      (visited, r) =>
+        e.join(visited.filter(col("dist") === r - 1)
+            .select(col("node").as("src")), "src")
+          .select(col("dst").as("node")).distinct()
+          .join(visited, Seq("node"), "left_anti")
+          .withColumn("dist", lit(r.toLong))
     }
-    visited
   }
 
   /** Bounded-round single-source shortest paths (Bellman-Ford
@@ -869,10 +720,11 @@ object Graph {
     * after round r, `dist` holds the exact cheapest cost over paths of
     * ≤ r edges (integer weights — no float accumulation). Each round
     * is ONE edge join + ONE min-agg over the union with the carried
-    * frame, lineage-cut per round; the carried frame only ever joins
-    * the STATIC edge list, so Catalyst size stats grow linearly per
-    * round, never square (the converge-loop lesson). Unreached nodes
-    * are absent, matching [[bfs]]'s contract. */
+    * frame, lazily lineage-cut by the driver (the carried frame is read
+    * twice per round); it only ever joins the STATIC edge list, so
+    * Catalyst size stats grow linearly per round, never square (the
+    * converge-loop lesson). Unreached nodes are absent, matching
+    * [[bfs]]'s contract. */
   private[graft] def sssp(edges: DataFrame, seeds: DataFrame,
       rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 16,
@@ -880,66 +732,42 @@ object Graph {
         "the sane 1..16 range")
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
-    var dist = seeds.select(col("node").cast("long").as("node"))
-      .distinct().withColumn("dist", lit(0L)).localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      val relaxed = e
-        .join(dist.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-      dist = dist.unionAll(relaxed)
-        .groupBy("node").agg(min("dist").as("dist"))
-        .localCheckpoint(true)
+    iterate(seeds.select(col("node").cast("long").as("node"))
+        .distinct().withColumn("dist", lit(0L)), Rounds(rounds)) {
+      (dist, _) =>
+        dist.unionAll(e.join(dist.withColumnRenamed("node", "src"), "src")
+            .select(col("dst").as("node"), (col("dist") + col("w")).as("dist")))
+          .groupBy("node").agg(min("dist").as("dist"))
     }
-    dist
   }
 
-  private[graft] def kCorePeel(edges: DataFrame, k: Int,
-      rounds: Int): DataFrame = {
-    var nodes = degrees(edges).filter(col("dg") >= k).select("n")
-    for (_ <- 1 to rounds) {
-      // LAZY cut: the round's broadcast collect is the only
-      // materialization (the reused exchange means the second semi join
-      // reads the same broadcast) — persists as a side effect
-      nodes = nodes.localCheckpoint(false)
-      nodes = degrees(induced(edges, nodes)).filter(col("dg") >= k)
-        .select("n")
-    }
-    nodes = nodes.localCheckpoint(false)
-    degrees(induced(edges, nodes)).filter(col("dg") >= k)
-  }
-
-  /** Run-to-convergence k-core — peel until a round removes NO node
-    * (peeling is monotone, so a stable survivor count IS the exact
-    * fixed point: every remaining node has induced degree ≥ k, the
-    * true k-core). The per-round probe is the `count()` of the already-
-    * materialized survivor set — free next to the peel itself — and
-    * the result equals any sufficiently long fixed-round
-    * [[kCorePeel]]; GraphSpec pins that. Raises on `maxRounds`
-    * exhaustion (cannot happen below |V| rounds — each non-final round
-    * removes ≥ 1 node — so hitting the cap means the cap is too small
-    * for the graph's peel depth, a configuration error worth a loud
-    * stop). */
-  private[graft] def kCoreConverge(edges: DataFrame, k: Int,
-      maxRounds: Int = 100): DataFrame = {
-    require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
-    var nodes = degrees(edges).filter(col("dg") >= k).select("n")
-      .localCheckpoint(false)
-    var prev = nodes.count()
-    var i = 0
-    var done = false
-    while (!done && i < maxRounds) {
-      val next = degrees(induced(edges, nodes)).filter(col("dg") >= k)
-        .select("n").localCheckpoint(false)
-      val cnt = next.count()
-      done = cnt == prev
-      prev = cnt
-      nodes = next
-      i += 1
-    }
-    if (!done) sys.error(
-      s"k-core did not stabilize in $maxRounds rounds; raise maxRounds " +
-        "(peel depth exceeds the cap)")
-    degrees(induced(edges, nodes))
+  /** k-core peel over a canonical (a < b) edge list: peel degree-<k
+    * nodes, then return the final degree table of the surviving induced
+    * subgraph (n, dg ≥ k). Each round is two semi joins + one degree agg
+    * over the shrinking node set (the EDGE cache never rebuilds), lazily
+    * cut — the survivor set is referenced twice per round, so an
+    * unrolled chain would double per round, and the round's broadcast
+    * collect (or count probe) is its only materialization. `converge`
+    * picks the halt rule: `rounds` fixed peels (the oracle key
+    * `q_graph_kcore` replays them as chained CTEs), or peel until a
+    * round removes NO node — peeling is monotone, so a stable survivor
+    * count IS the exact fixed point, the true k-core, and equals any
+    * sufficiently long fixed-round peel (GraphSpec pins that). A
+    * converge run raises when `rounds` is exhausted (impossible below
+    * |V| rounds — each non-final round removes ≥ 1 node — so hitting the
+    * cap means it is too small for the graph's peel depth, a
+    * configuration error worth a loud stop). */
+  private[graft] def kCorePeel(edges: DataFrame, k: Int, rounds: Int,
+      converge: Boolean = false): DataFrame = {
+    require(rounds >= 1, s"rounds must be >= 1: $rounds")
+    def peel(nodes: DataFrame) =
+      degrees(induced(edges, nodes)).filter(col("dg") >= k)
+    val halt =
+      if (converge) StableCount(rounds, s"k-core did not stabilize in " +
+        s"$rounds rounds; raise maxRounds (peel depth exceeds the cap)")
+      else Rounds(rounds)
+    peel(iterate(degrees(edges).filter(col("dg") >= k).select("n"), halt)(
+      (nodes, _) => peel(nodes).select("n")))
   }
 
   val defs: Seq[QueryDef] = Seq(
@@ -1234,7 +1062,7 @@ object Graph {
     // seed-biased importance on the trade graph: restart mass lands
     // only on the q_graph_bfs seed suppliers, so rank = proximity-
     // weighted influence relative to the trusted set (TrustRank) —
-    // [[pageRankFrom]] documents the engine form (the exact-integer
+    // [[pageRank]] documents the engine form (the exact-integer
     // pageRank loop with a |S|-sized restart join per round). The
     // oracle unrolls the same three rounds as chained CTEs with the
     // identical floor divisions.

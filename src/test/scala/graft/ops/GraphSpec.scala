@@ -1,5 +1,9 @@
 package graft.ops
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -38,6 +42,21 @@ class GraphSpec extends SparkSpec {
   private def symmetrize(e: Seq[(Long, Long)]): Seq[(Long, Long)] =
     (e ++ e.map(_.swap)).distinct
 
+  /** Spark jobs started while `body` runs (the PartnerTagSpec listener
+    * pattern), with the listener bus drained on both sides so the count
+    * holds exactly this body's jobs. */
+  private def jobsOf(body: => Unit): Int = {
+    val n = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try { body; TestBus.drain(sc) } finally sc.removeSparkListener(listener)
+    n.get
+  }
+
   test("pageRank matches the sequential integer replay exactly on a random graph") {
     // deterministic pseudo-random graph (seeded randomness is banned in
     // the ENGINE, not in test fixtures driving it)
@@ -60,25 +79,7 @@ class GraphSpec extends SparkSpec {
       "integer floor-division ranks must not depend on partitioning")
   }
 
-  test("the broadcast and checkpointed-shuffle paths produce identical ranks") {
-    // the size-adaptive dispatch (pageRank broadcastMaxNodes) must be a
-    // pure execution-shape choice: force the large-graph path with a
-    // zero threshold and compare bit-for-bit against the small-graph one
-    import spark.implicits._
-    val rnd = new scala.util.Random(11)
-    val edges = symmetrize(
-      Seq.fill(100)((rnd.nextInt(20).toLong, rnd.nextInt(20).toLong))
-        .filter { case (a, b) => a != b })
-    val df = edges.toDF("src", "dst")
-    def toMap(r: Array[org.apache.spark.sql.Row]) =
-      r.map(x => x.getLong(0) -> x.getLong(1)).toMap
-    val smallPath = toMap(Graph.pageRank(df, 3).collect())
-    val largePath = toMap(Graph.pageRank(df, 3, broadcastMaxNodes = 0L).collect())
-    assert(smallPath == largePath,
-      "execution-shape dispatch changed the integer rank results")
-  }
-
-  test("labelPropagation matches a sequential replay and both dispatch paths agree") {
+  test("labelPropagation matches the sequential min-tie-break replay") {
     import spark.implicits._
     def bruteLpa(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
       val nbrs = edges.groupBy(_._1).map { case (n, es) => n -> es.map(_._2) }
@@ -99,13 +100,88 @@ class GraphSpec extends SparkSpec {
     val df = edges.toDF("src", "dst")
     def toMap(r: Array[org.apache.spark.sql.Row]) =
       r.map(x => x.getLong(0) -> x.getLong(1)).toMap
-    val got = toMap(Graph.labelPropagation(df, 3).collect())
-    assert(got == bruteLpa(edges, 3),
+    assert(toMap(Graph.labelPropagation(df, 3).collect()) == bruteLpa(edges, 3),
       "distributed LPA diverged from the sequential min-tie-break replay")
-    val shuffled = toMap(
-      Graph.labelPropagation(df, 3, broadcastMaxNodes = 0L).collect())
-    assert(got == shuffled,
-      "execution-shape dispatch changed the LPA labels")
+  }
+
+  test("every loop's broadcast and shuffle arms agree, fixed and converge") {
+    // the size-adaptive dispatch (broadcastMaxNodes) must be a pure
+    // execution-shape choice: a zero threshold forces the large-graph
+    // shuffle arm, compared row for row against the broadcast arm
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val g = symmetrize(
+      Seq.fill(100)((rnd.nextInt(20).toLong, rnd.nextInt(20).toLong))
+        .filter { case (a, b) => a != b }).toDF("src", "dst")
+    // converge runs need graphs that reach their integer fixed point in a
+    // few rounds: a triangle (uniform or all-seeded mass is already
+    // fixed) and two triangles joined by a bridge (LPA)
+    val tri = symmetrize(Seq((0L, 1L), (1L, 2L), (0L, 2L))).toDF("src", "dst")
+    val two = symmetrize(Seq((0L, 1L), (1L, 2L), (0L, 2L),
+      (10L, 11L), (11L, 12L), (10L, 12L), (2L, 10L))).toDF("src", "dst")
+    val seeds = Some(Seq(0L, 5L).toDF("node"))
+    val all = Some(Seq(0L, 1L, 2L).toDF("node"))
+    val runs: Seq[(String, Long => org.apache.spark.sql.DataFrame)] = Seq(
+      "pageRank" -> (b => Graph.pageRank(g, 3, broadcastMaxNodes = b)),
+      "pageRank converge" -> (b => Graph.pageRank(tri, 3, converge = true,
+        maxIters = 10, broadcastMaxNodes = b)),
+      "ppr" -> (b => Graph.pageRank(g, 3, seeds = seeds, broadcastMaxNodes = b)),
+      "ppr converge" -> (b => Graph.pageRank(tri, 3, converge = true,
+        maxIters = 10, seeds = all, broadcastMaxNodes = b)),
+      "lpa" -> (b => Graph.labelPropagation(g, 3, broadcastMaxNodes = b)),
+      "lpa converge" -> (b => Graph.labelPropagation(two, 3, converge = true,
+        maxIters = 20, broadcastMaxNodes = b)))
+    for ((name, run) <- runs) {
+      def rows(b: Long) = run(b).collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+      val broadcastArm = rows(Graph.BroadcastMaxNodes)
+      assert(broadcastArm.nonEmpty, name)
+      assert(rows(0L) == broadcastArm,
+        s"$name: execution-shape dispatch changed the integer results")
+    }
+  }
+
+  test("job budget: no graph call runs more Spark jobs than its pinned count") {
+    // jobs per call are deterministic on a fixed input, while wall time
+    // is not; the budgets are the counts the per-algorithm loops ran
+    // before they shared one round driver, so a round that starts paying
+    // an extra job fails here
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    val g = symmetrize(
+      Seq.fill(60)((rnd.nextInt(16).toLong, rnd.nextInt(16).toLong))
+        .filter { case (a, b) => a != b }).toDF("src", "dst")
+    val weighted = g.withColumn("w", (col("src") + col("dst")) % 7 + 1)
+    val seeds = Seq(0L, 5L).toDF("node")
+    val tri = symmetrize(Seq((0L, 1L), (1L, 2L), (0L, 2L))).toDF("src", "dst")
+    val two = symmetrize(Seq((0L, 1L), (1L, 2L), (0L, 2L),
+      (10L, 11L), (11L, 12L), (10L, 12L), (2L, 10L))).toDF("src", "dst")
+    val core = Seq((0L, 1L), (1L, 2L), (0L, 2L),
+      (2L, 100L), (100L, 101L), (101L, 102L), (102L, 103L)).toDF("a", "b")
+    val budgets: Seq[(String, Int, () => org.apache.spark.sql.DataFrame)] = Seq(
+      ("pageRank", 13, () => graft.Graft.pageRank(g, 3)),
+      ("personalizedPageRank", 16, () => graft.Graft.personalizedPageRank(g, seeds, 3)),
+      ("labelPropagation", 11, () => graft.Graft.labelPropagation(g, 3)),
+      ("bfs", 19, () => graft.Graft.bfs(g, seeds, 4)),
+      ("sssp", 15, () => graft.Graft.sssp(weighted, seeds, 4)),
+      ("kCorePeel", 10, () => Graph.kCorePeel(core, 2, 3)),
+      ("kCore", 28, () => graft.Graft.kCore(core, 2, src = "a", dst = "b")),
+      ("pageRank converge", 12,
+        () => graft.Graft.pageRank(tri, converge = true, maxIters = 10)),
+      ("personalizedPageRank converge", 16,
+        () => graft.Graft.personalizedPageRank(tri, Seq(0L, 1L, 2L).toDF("node"),
+          converge = true, maxIters = 10)),
+      ("labelPropagation converge", 26,
+        () => graft.Graft.labelPropagation(two, converge = true, maxIters = 20)),
+      // the shuffle arms (broadcastMaxNodes = 0), the 100 TB shape
+      ("pageRank shuffle arm", 21, () => Graph.pageRank(g, 3, broadcastMaxNodes = 0L)),
+      ("personalizedPageRank shuffle arm", 26,
+        () => Graph.pageRank(g, 3, seeds = Some(seeds), broadcastMaxNodes = 0L)),
+      ("labelPropagation shuffle arm", 11,
+        () => Graph.labelPropagation(g, 3, broadcastMaxNodes = 0L)))
+    for ((name, budget, call) <- budgets) {
+      val jobs = jobsOf(call().collect())
+      assert(jobs <= budget, s"$name ran $jobs jobs; its budget is $budget")
+    }
   }
 
   test("the hub of a star graph gets the highest rank; mass is conserved up to floor loss") {
@@ -282,7 +358,7 @@ class GraphSpec extends SparkSpec {
     assert(runBfs(path, Seq(0L), 16) == full)
   }
 
-  /** Sequential replay of pageRankFrom's integer contract: r0 = 10^12
+  /** Sequential replay of personalized pageRank's integer contract: r0 = 10^12
     * on seeds else 0; share = rank div deg; rank' = (seed ? 0.15·10^12
     * : 0) + (85·Σshares) div 100. */
   private def brutePpr(edges: Seq[(Long, Long)], seeds: Set[Long],
@@ -309,9 +385,9 @@ class GraphSpec extends SparkSpec {
       Seq.fill(100)((rnd.nextInt(20).toLong, rnd.nextInt(20).toLong))
         .filter { case (a, b) => a != b })
     val seeds = Seq(0L, 5L)
-    def run(parts: Int) = Graph.pageRankFrom(
-        edges.toDF("src", "dst").repartition(parts),
-        seeds.toDF("node"), iters = 3).collect()
+    def run(parts: Int) = Graph.pageRank(
+        edges.toDF("src", "dst").repartition(parts), iters = 3,
+        seeds = Some(seeds.toDF("node"))).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val want = brutePpr(edges, seeds.toSet, 3)
     assert(run(1) == want,

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{broadcast, col, count, lit, when}
 
 import graft.{SparkEntry, SparkSpec}
 
@@ -890,15 +891,39 @@ class PlanSpec extends SparkSpec {
 
   test("q_profile_equidepth bins via broadcast cutpoints, never a global sort of the fact") {
     val p = plan("q_profile_equidepth")
-    // histQuantiles materializes the value-grain histogram with a
-    // lineage cut (the corpus pass runs ONCE), so the plan reads it as
-    // a concrete RDD scan; windows run only over histogram-derived
-    // frames, never raw fact rows
+    // the cutpoints come from histQuantiles' full-driver arm: the value
+    // histogram is small enough to finish as driver arithmetic, so the
+    // 1-row cutpoint frame reaches the plan as a local table
+    assert(p.contains("LocalTableScan"),
+      s"the cutpoints must be a driver-computed local table:\n$p")
+    assertBinsPrunedFact(p)
+  }
+
+  test("q_profile_equidepth's distributed quantile arm reads a materialized histogram") {
+    // histDriverMaxRows = 0 forces the distributed arm on the same input:
+    // the value histogram is a lineage-cut (checkpointed) scan and the
+    // windows run only over histogram-derived frames, never raw fact rows
+    spark.conf.set("spark.sql.maxMetadataStringLength", 2000)
+    val orders = graft.warehouse.Tables.table(spark, sfDir, "orders")
+      .select("o_totalprice")
+    val cuts = Relational.histQuantiles(orders, "o_totalprice", Nil,
+      Seq(0.25 -> "c1", 0.5 -> "c2", 0.75 -> "c3"), histDriverMaxRows = 0)
+    val p = orders.join(broadcast(cuts))
+      .select(when(col("o_totalprice") <= col("c1"), 0)
+        .when(col("o_totalprice") <= col("c2"), 1)
+        .when(col("o_totalprice") <= col("c3"), 2)
+        .otherwise(3).as("bin"), col("o_totalprice"))
+      .groupBy("bin").agg(count(lit(1)).as("n"))
+      .queryExecution.executedPlan.toString
     assert(p.contains("Scan ExistingRDD"),
       s"the value histogram must be a materialized (checkpointed) scan:\n$p")
-    // the only parquet scans left belong to the final binning pass —
-    // pruned to the value column; a window over the raw fact would
-    // need a wider scan than this
+    assertBinsPrunedFact(p)
+  }
+
+  /** The binning pass of q_profile_equidepth: every parquet scan left is
+    * pruned to the value column (a window over the raw fact would need a
+    * wider scan), and the 1-row cutpoints broadcast back onto the fact. */
+  private def assertBinsPrunedFact(p: String): Unit = {
     val scans = p.linesIterator.filter(_.contains("FileScan parquet")).toSeq
     assert(scans.nonEmpty &&
       scans.forall(_.contains("ReadSchema: struct<o_totalprice:double>")),
